@@ -14,14 +14,33 @@ Oracle-matching rules applied throughout the catalog (SURVEY.md §7):
   results are bit-identical regardless of summation order — this matters
   because Spark and DuckDB sum partitions in different orders;
 - timestamps stay UTC (session TZ pinned in session.py).
+
+The driver certifies the FIRST ``WINDOW_SIZE`` entries of ``queries()``
+each round. That window is ranked from the committed
+``CORRECTNESS_r{N}.json`` verdicts (current round = last N + 1): tier 0
+is rows with no verdict or a latest verdict <= current - STALE_ROUNDS;
+tier 1 is ``RECERT`` rows not yet certified at their round; tier 2 is
+the rest. Oldest verdict first within a tier, ties by name.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+WINDOW_SIZE = 50
+STALE_ROUNDS = 10
+# Plan-changed rows: query -> first round whose verdict certifies the
+# changed plan. Entries are inert once that verdict lands.
+RECERT: dict[str, int] = {"q_stream_wiredump_sink_replay": 17}
+
+_REPO = Path(__file__).resolve().parents[2]
+_VERDICT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
 @dataclass(frozen=True)
@@ -94,123 +113,44 @@ def query(
     return deco
 
 
-# The driver's correctness gate samples the FIRST 50 entries of
-# ``queries()``. Round-16 rotation (VERDICT r15 next-steps #2),
-# computed from CORRECTNESS_r*.json (tests/test_registry_window.py
-# recomputes the same debt and fails on drift):
-# (a) 0 r15 births (the freeze held a fourth round);
-# (b) VERDICT r15 #2 (MANDATORY): every r15 plan-changed row seats
-#     THIS round instead of riding the r17/r18 plan pre-written at
-#     r15 close — the Holt recursion->Arrow rewrite, the two
-#     cpu_fanout md5 lanes, and q_knn_ivf's fan-policy move carried
-#     builder-only oracle claims for a full round, and the judge
-#     wants the driver's independent hash verdict now. 6 rows:
-#     q_holt_linear_smoothing, q_holt_winters_additive,
-#     q_forecast_backtest (verdict r10), q_knn_ivf (r14),
-#     q_benjamini_hochberg (r11), q_trigram_like_index (r10).
-# (c) q_approx_aggregates (verdict r14; r15 plan change — exact
-#     median moved onto group_exact_percentiles) and
-#     q_audio_zero_crossing (r14 plan change, exchange-kind-only
-#     delta, verdict r8, deferred from r15 by one-slot overflow).
-# (d) 42 of the 45-row r6-verdict tier (it crosses the 10-round
-#     staleness horizon at r17, so unseated rows become r17's
-#     mandatory window). 6 + 2 + 42 = 50 exactly. The 3 deferred
-#     canaries — q_null_safe_join, q_variant_shred,
-#     q_wiredump_roundtrip (stable scalar/codec rows, plans
-#     untouched since r6) — are r17 MUSTS: r17 = 3 + the 43-row r7
-#     tier = 46, four slots spare (the Holt seats r15 had booked
-#     there are freed by (b)).
-# NEW_THIS_ROUND resets to () at round open per protocol.
-PRIORITY_ORDER: tuple[str, ...] = (
-    # (b) r15 plan-change re-certs pulled forward (VERDICT r15 #2)
-    "q_holt_linear_smoothing",
-    "q_holt_winters_additive",
-    "q_forecast_backtest",
-    "q_knn_ivf",
-    "q_benjamini_hochberg",
-    "q_trigram_like_index",
-    # (c) r14/r15 plan-change re-certs per the r15-close plan
-    "q_approx_aggregates",
-    "q_audio_zero_crossing",
-    # (d) the r6-verdict tier, 42 of 45, alphabetical (3 canaries
-    #     deferred to r17 — see the header comment)
-    "q_asof_join_forward",
-    "q_asof_join_tolerance",
-    "q_attribution_last_touch",
-    "q_autocorr_lag",
-    "q_bigram_lm_score",
-    "q_binaryfile_ingest",
-    "q_bloom_filter_audit_portable",
-    "q_chi2_independence",
-    "q_cogroup_conversion_lag",
-    "q_collated_join",
-    "q_corpus_drift_kl",
-    "q_countmin_heavy_hitters_portable",
-    "q_distributed_exact_quantiles",
-    "q_embedding_outliers",
-    "q_entity_resolution",
-    "q_entropy_by_source",
-    "q_eval_auc_pr",
-    "q_gini_concentration",
-    "q_group_kfold",
-    "q_hard_negatives",
-    "q_hll_registers_portable",
-    "q_hops_recursive_cte",
-    "q_idempotent_sink_merge",
-    "q_interval_sweepline",
-    "q_lateral_topn",
-    "q_mode_per_group",
-    "q_pq_adc_topk_portable",
-    "q_pq_encode_portable",
-    "q_referential_integrity",
-    "q_scd2_point_in_time_join",
-    "q_session_window_dynamic_gap",
-    "q_skyline_pareto",
-    "q_snapshot_time_travel",
-    "q_statestore_introspection",
-    "q_stream_available_now_incremental",
-    "q_stream_fanout_dual_sink_replay",
-    "q_stream_full_outer_join_replay",
-    "q_stream_merge_sink_replay",
-    "q_stream_topk_window_replay",
-    "q_stream_two_level_agg_replay",
-    "q_stream_wiredump_source_replay",
-    "q_triangle_oriented",
-)
-# Queries declared for the first time in the CURRENT round (no driver
-# verdict yet, by construction — they were born after the last
-# CORRECTNESS file). tests/test_registry_window.py asserts every name
-# here is genuinely verdict-less and that the NEXT round's mandatory
-# window (these births + rows going stale) still fits in 50 slots.
-# Reset to () at each round open, after moving the previous round's
-# births into PRIORITY_ORDER.
-NEW_THIS_ROUND: tuple[str, ...] = ()
-# r17 window plan (compute, don't trust): lead with any r16 births,
-# then the 3 deferred r6 canaries (q_null_safe_join, q_variant_shred,
-# q_wiredump_roundtrip — they cross the horizon at r17, MANDATORY),
-# then the 43-row r7-verdict tier (its last compliant seat is r17 —
-# it crosses the horizon at r18), then any r16 plan-change re-certs
-# in the remaining 4 slots. 3 + 43 = 46, four slots spare.
-#
-# Session-config deltas (the AQE coalesce minPartitionSize floor and
-# its per-query 1m re-pin on the iterative graph tier added in r16,
-# the replay state-provider default, the timeout replay's state
-# partition width) change no logical/static physical plans and book no
-# seats — the q_audio_zero_crossing "runtime conf books no seat"
-# precedent from r15.
-# r16 plan changes needing re-cert seats: q_stream_wiredump_sink_replay
-# (verdict r7 — micro-batches now fan to 8 sink tasks, one added
-# streaming Exchange; oracle-identical at sf0.01+sf0.1) rides its
-# NATURAL r17 seat with the rest of the r7 tier — no extra slot.
-# tests/test_registry_window.py fails if a deferred canary is missed.
+def committed_verdicts(root: Path = _REPO) -> tuple[dict[str, int], int]:
+    """Query -> latest verdict round in ``root``, and the open round (last + 1).
+    Rounds are ints folded with max: file order (r9 after r16) never matters."""
+    found = [(int(m[1]), f) for f in root.iterdir() if (m := _VERDICT.fullmatch(f.name))]
+    latest: dict[str, int] = {}
+    for r, f in found:
+        for name in json.loads(f.read_text()):
+            latest[name] = max(latest.get(name, 0), r)
+    return latest, max((r for r, _ in found), default=0) + 1
+
+
+def rank(
+    names: Iterable[str], latest: dict[str, int], current: int, recert: dict[str, int] = RECERT
+) -> list[str]:
+    """Certification order at round ``current`` (tiers: module doc)."""
+
+    def key(name: str) -> tuple[int, int, str]:
+        seen = latest.get(name)
+        if seen is None or seen <= current - STALE_ROUNDS:
+            return 0, seen or 0, name
+        return (1 if seen < recert.get(name, 0) else 2), seen, name
+
+    return sorted(names, key=key)
+
+
+def __getattr__(name: str):
+    # Derived on access: QUERIES fills only after this module is imported.
+    if name == "PRIORITY_ORDER":
+        return tuple(s.name for s in _ordered_specs()[:WINDOW_SIZE])
+    if name == "NEW_THIS_ROUND":
+        latest, _ = committed_verdicts()
+        return tuple(n for n in QUERIES if n not in latest)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+
 
 def _ordered_specs() -> list[QuerySpec]:
-    missing = [n for n in PRIORITY_ORDER if n not in QUERIES]
-    if missing:
-        raise ValueError(f"PRIORITY_ORDER names not registered: {missing}")
-    prioritized = set(PRIORITY_ORDER)
-    rest = [spec for name, spec in QUERIES.items() if name not in prioritized]
-    return [QUERIES[n] for n in PRIORITY_ORDER] + rest
+    head = rank(QUERIES, *committed_verdicts())[:WINDOW_SIZE]
+    return [QUERIES[n] for n in head] + [s for n, s in QUERIES.items() if n not in head]
 
 
 def queries_dict() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

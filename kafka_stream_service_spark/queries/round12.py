@@ -207,8 +207,8 @@ def q_snapshot_gc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at sf0.1 (measured r14) and the In() skips almost nothing — the K=8
 # regression the r13 judge flagged, re-created at any k. At 1% it
 # touches 0.18k–0.30k, so the certified row actually runs in the
-# file-skipping regime the design is for. The probe
-# (tools/probe_round12.py) sweeps other slice sizes parametrically.
+# file-skipping regime the design is for. SCALE.md "Round-13: the IVF
+# prune demonstrated, not asserted" sweeps other slice sizes and k.
 IVF_DELTA_MOD = 100
 IVF_DELTA_REM = 7
 
@@ -499,8 +499,8 @@ def q_knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     seam test), not a post-scan join filter. Refresh cost is
     O(delta x k + touched-list occupancy), decoupled from index size —
     the q_text_index_delta contract lifted to embedding space.
-    SCALE.md's r13 probe demonstrates the prune parametrically across
-    k and slice sizes (tools/probe_round12.py).
+    SCALE.md ("Round-13: the IVF prune demonstrated, not asserted")
+    demonstrates the prune parametrically across k and slice sizes.
     """
     return ivf_refresh_census(spark, sf_dir)
 

@@ -45,6 +45,7 @@ import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
 
+from pyspark import TaskContext
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -150,6 +151,9 @@ class WireDumpReader(DataSourceReader):
 class _SegmentCommit(WriterCommitMessage):
     tmp_path: str
     final_path: str
+    # Task partition id: commits assign segment seq in this order, so the
+    # bytes of part-...-{seq} are reproducible (tmp_path is random).
+    partition_id: int = 0
 
 
 def _write_segment_arrow(path: str, iterator) -> _SegmentCommit:
@@ -187,7 +191,9 @@ def _write_segment_arrow(path: str, iterator) -> _SegmentCommit:
                 frame = encode_py(hd, bytes(p))
                 f.write(struct.pack(">I", len(frame)))
                 f.write(frame)
-    return _SegmentCommit(tmp_path=tmp, final_path="")
+    return _SegmentCommit(
+        tmp_path=tmp, final_path="", partition_id=TaskContext.get().partitionId()
+    )
 
 
 class WireDumpWriter(DataSourceArrowWriter):
@@ -216,7 +222,7 @@ class WireDumpWriter(DataSourceArrowWriter):
         import time as _time
 
         base = _time.time_ns()
-        for i, m in enumerate(sorted(messages, key=lambda m: m.tmp_path)):
+        for i, m in enumerate(sorted(messages, key=lambda m: m.partition_id)):
             final = os.path.join(self.path, f"part-{base:020d}-{i:05d}.wiredump")
             os.replace(m.tmp_path, final)
 
@@ -331,7 +337,7 @@ class WireDumpStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:
         for i, m in enumerate(
-            sorted((m for m in messages if m), key=lambda m: m.tmp_path)
+            sorted((m for m in messages if m), key=lambda m: m.partition_id)
         ):
             final = os.path.join(
                 self.path, f"part-e{int(batchId):010d}-{i:05d}.wiredump"

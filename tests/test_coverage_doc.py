@@ -43,24 +43,6 @@ def test_every_documented_query_registered():
     )
 
 
-def test_priority_window_is_exactly_50():
-    """The driver samples the first 50 queries() entries; PRIORITY_ORDER
-    must pin at least the full window (and name only real queries —
-    registry construction already raises on unknown names)."""
-    from kafka_stream_service_spark.queries.registry import (
-        PRIORITY_ORDER,
-        QUERIES,
-    )
-
-    assert len(PRIORITY_ORDER) == 50, (
-        f"PRIORITY_ORDER has {len(PRIORITY_ORDER)} entries — pin exactly the "
-        "50-slot driver window so overflow composition is deliberate"
-    )
-    assert len(PRIORITY_ORDER) == len(set(PRIORITY_ORDER)), "duplicate names"
-    unknown = [n for n in PRIORITY_ORDER if n not in QUERIES]
-    assert not unknown, f"PRIORITY_ORDER names not registered: {unknown}"
-
-
 def test_bench_tiers_reference_registered_queries():
     """Every bench HEADLINE/DETAIL_ONLY name resolves in the registry,
     no name appears in both tiers, and no tier has duplicates — a typo
