@@ -24,6 +24,7 @@ import json
 import struct
 from functools import lru_cache
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -91,32 +92,104 @@ def decode_py(data: bytes) -> tuple[dict[str, list[str]], bytes]:
     return headers, data[pos:]
 
 
+# Past this many distinct header sections (decode) or header sets
+# (encode) a prefix cache stops growing and later shapes take the plain
+# path, so a stream of unique headers costs a bounded amount of memory
+# however long the cache lives.
+PREFIX_CACHE_MAX = 1024
+
+_unpack_i32 = struct.Struct(">i").unpack_from
+
+
+def _shared_read_only(*_args, **_kwargs):
+    raise TypeError(
+        "decoded headers are shared by every frame with the same header "
+        "section; build new headers (e.g. {k: list(v) for k, v in h.items()}) "
+        "instead of changing them in place"
+    )
+
+
+class _SharedValues(list):
+    """A header's values as handed out by ``decode_with_prefix_cache``:
+    equal to (and a) ``list``, but every in-place change raises."""
+
+    __slots__ = ()
+    __setitem__ = __delitem__ = __iadd__ = __imul__ = _shared_read_only
+    append = extend = insert = pop = remove = clear = sort = reverse = _shared_read_only
+
+    def __reduce__(self):  # copies and pickles are plain, mutable lists
+        return list, (list(self),)
+
+
+class SharedHeaders(dict):
+    """Decoded headers shared by every frame with the same wire header
+    section. Equal to (and a) ``dict``, so Arrow, JSON and comparisons
+    see plain headers, but every in-place change of the mapping or of a
+    value list raises ``TypeError``: a function that edited one frame's
+    headers in place would otherwise rewrite every other frame (and later
+    batch) of that shape. Copies (``copy.deepcopy``, pickling) are plain
+    dicts of plain lists; ``dict(h)`` is a plain dict of read-only lists.
+
+    ``key`` is the headers' hashable form, computed once per shape, so
+    ``encode_with_prefix_cache`` need not rebuild it per frame. Numpy
+    probes each element of a list it converts for array interfaces,
+    which costs microseconds per element for a dict subclass: build
+    object columns of these with ``np.fromiter`` instead.
+    """
+
+    __slots__ = ("key",)
+    __setitem__ = __delitem__ = __ior__ = _shared_read_only
+    update = setdefault = pop = popitem = clear = _shared_read_only
+
+    def __reduce__(self):
+        return dict, ({k: list(v) for k, v in self.items()},)
+
+
+def _headers_key(headers) -> tuple:
+    return tuple((k, tuple(v)) for k, v in headers.items())
+
+
+def _header_section_end(data: bytes) -> int:
+    """Offset of the payload: the header section's length fields walked
+    without parsing any name or value."""
+    pos = 2
+    for _ in range(data[1]):
+        pos += 1 + data[pos]
+        pos += 4 + _unpack_i32(data, pos)[0]
+    return pos
+
+
 def decode_with_prefix_cache(data: bytes, cache: dict) -> tuple[dict[str, list[str]], bytes]:
     """Decode one message, memoizing parsed headers per distinct wire
     PREFIX (marker + header section) — the decode-side mirror of
     ``encode_with_prefix_cache``. Real streams carry a handful of header
     shapes across millions of records; after the first full parse of a
-    shape, every later frame with the same prefix decodes as one
-    ``startswith`` + payload slice (measured ~6x over ``decode_py`` on
-    the bench frame mix).
+    shape, a frame decodes as a walk over its length fields, one dict
+    lookup and a payload slice, so a miss costs the same lookup on top
+    of the parse whatever the cache holds.
 
     Safety: a header section parses UNIQUELY — the count byte and the
-    per-header length fields delimit it — so if ``data`` starts with a
-    cached prefix, a full parse would reproduce exactly that prefix's
-    headers and payload offset; at most one cached prefix can match.
-    The returned dict is SHARED across frames with the same prefix:
-    callers must treat it as frozen. Both MessageFunction paths already
-    satisfy this (uppercase builds a new frame; RemoteFunction copies
-    before the wire) — in-place header mutation has never been part of
-    the transform contract.
+    per-header length fields delimit it — so the walk finds the same end
+    ``decode_py`` would, and a cached prefix equal to ``data[:end]``
+    holds exactly that frame's headers. A frame that does not walk (bad
+    marker, truncated) misses and raises from ``decode_py`` as before.
+    The returned headers are a ``SharedHeaders`` object, the same one for
+    every frame with the same prefix; changing it in place raises.
     """
-    for prefix, hdrs in cache.items():
-        if data.startswith(prefix):
-            return hdrs, data[len(prefix):]
+    if len(data) > 1 and data[0] == 0xFF:
+        try:
+            end = _header_section_end(data)
+            hdrs = cache.get(data[:end])
+        except (IndexError, struct.error):
+            hdrs = None
+        if hdrs is not None:
+            return hdrs, data[end:]
     h, p = decode_py(data)
-    if len(cache) < 1024:  # bound the per-worker cache; past it, parse
-        cache[data[: len(data) - len(p)]] = h
-    return h, p
+    hdrs = SharedHeaders({k: _SharedValues(v) for k, v in h.items()})
+    hdrs.key = _headers_key(h)
+    if len(cache) < PREFIX_CACHE_MAX:
+        cache[data[: len(data) - len(p)]] = hdrs
+    return hdrs, p
 
 
 def encode_with_prefix_cache(headers, payload, cache: dict) -> bytes:
@@ -125,12 +198,14 @@ def encode_with_prefix_cache(headers, payload, cache: dict) -> bytes:
     the headers, which repeat across records, so only the payload concat
     runs per record. SINGLE implementation shared by the staged
     `encode_message` UDF and the fused pipeline: the byte-parity
-    contract between them depends on this being one code path."""
-    key = tuple((k, tuple(v)) for k, v in (headers or {}).items())
+    contract between them depends on this being one code path. The
+    cache holds at most ``PREFIX_CACHE_MAX`` header sets."""
+    key = headers.key if type(headers) is SharedHeaders else _headers_key(headers or {})
     prefix = cache.get(key)
     if prefix is None:
         prefix = encode_py(headers, b"")
-        cache[key] = prefix
+        if len(cache) < PREFIX_CACHE_MAX:
+            cache[key] = prefix
     return prefix + (bytes(payload) if payload is not None else b"")
 
 
@@ -147,12 +222,13 @@ def encode_message(msg: pd.DataFrame) -> pd.Series:
 def decode_message(value: pd.Series) -> pd.DataFrame:
     """binary (wire format) -> struct<headers, payload>."""
     cache: dict[bytes, dict] = {}
-    headers, payloads = [], []
-    for data in value:
-        h, p = decode_with_prefix_cache(bytes(data), cache)
-        headers.append(h)
-        payloads.append(p)
-    return pd.DataFrame({"headers": headers, "payload": payloads})
+    decoded = [decode_with_prefix_cache(bytes(data), cache) for data in value]
+    return pd.DataFrame(
+        {
+            "headers": np.fromiter((h for h, _ in decoded), object, len(decoded)),
+            "payload": [p for _, p in decoded],
+        }
+    )
 
 
 # struct<headers, payload, error string> — the lenient decode shape

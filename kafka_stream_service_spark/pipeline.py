@@ -1,14 +1,22 @@
-"""The streaming spine: source -> decode -> transform -> encode -> sink.
+"""The streaming spine: source -> decode -> function -> encode -> sink.
 
 This is the reference's entire dataflow (StreamsApplication.java:146-163)
-as a composable Spark pipeline:
+as a Spark pipeline:
 
     Kafka/file source (R1-R5)
-      -> decode_message over `value` (R6)
-      -> project to Message (R7)
-      -> transform slot: mapInPandas function / identity bypass (R8-R9)
-      -> null key + encode_message (R10-R11)
+      -> `decoded` observe tap on the source frames (R17)
+      -> project to `value`, then ONE mapInPandas:
+           decode (R6-R7) -> function slot / identity bypass (R8-R9)
+           -> encode (R10-R11), null key
       -> sink: Kafka at-least-once, or foreachBatch exactly-once (R12)
+
+The per-record steps run fused, as the reference pipelines them: wire
+bytes enter the Python worker once and leave once, and the
+``map<string,array<string>>`` headers never cross Arrow.
+``run_pipeline_batch`` is that one stage, for streaming and bounded
+frames alike. ``decode_stage``, ``transform_messages`` and
+``encode_stage`` stay as building blocks for frames that need the
+decoded Message columns (the dead-letter pipeline, joins on headers).
 
 Ordering semantics delta (documented, SURVEY.md §7 "What's hard" #2): the
 reference is globally ordered (single thread + sequential concatMap); Spark
@@ -24,7 +32,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .codec import decode_message, encode_message
+from .codec import (
+    decode_message,
+    decode_with_prefix_cache,
+    encode_message,
+    encode_with_prefix_cache,
+)
 from .eos import ForeachBatchIdempotentWriter, kafka_transactional_batch_writer
 from .sources import stream_file_source, stream_kafka_source, write_kafka_sink, write_memory_sink
 from .transform import FunctionConfig, MessageFunction, transform_messages
@@ -59,23 +72,28 @@ class PipelineConfig:
 WIRE_FRAME_DDL = "key binary, value binary"
 
 
+def _observe_decoded(frames: DataFrame) -> DataFrame:
+    """The ``records.log()`` tap (R17, StreamsApplication.java:147):
+    record count and wire bytes per micro-batch, surfaced in every
+    QueryProgressEvent under observedMetrics["decoded"]."""
+    return frames.observe(
+        "decoded",
+        F.count(F.lit(1)).alias("n_records"),
+        F.coalesce(F.sum(F.length("value")), F.lit(0)).alias("wire_bytes"),
+    )
+
+
 def decode_stage(frames: DataFrame, observe: bool = True) -> DataFrame:
     """R6+R7: wire frames -> Message columns (headers, payload).
 
     Keeps only the decoded value, dropping the envelope — exactly
     ``records.map(ConsumerRecord::value)`` (StreamsApplication.java:176).
 
-    ``observe`` attaches row-level metrics (record count, payload bytes)
-    to each micro-batch — the Spark-native form of the reference's
-    ``records.log()`` tap (R17, StreamsApplication.java:147): metrics
-    surface in every QueryProgressEvent under observedMetrics["decoded"].
+    ``observe`` attaches the ``decoded`` tap (record count, wire bytes)
+    to each micro-batch, as the spine does.
     """
     if observe:
-        frames = frames.observe(
-            "decoded",
-            F.count(F.lit(1)).alias("n_records"),
-            F.coalesce(F.sum(F.length("value")), F.lit(0)).alias("wire_bytes"),
-        )
+        frames = _observe_decoded(frames)
     return frames.select(decode_message(F.col("value")).alias("msg")).select(
         "msg.headers", "msg.payload"
     )
@@ -114,9 +132,7 @@ def build_pipeline(
     else:
         raise ValueError(f"unknown source {cfg.source!r}")
 
-    messages = decode_stage(frames)
-    transformed = transform_messages(messages, fn, enabled=cfg.function.enabled)
-    return encode_stage(transformed)
+    return run_pipeline_batch(frames, fn, enabled=cfg.function.enabled)
 
 
 def start_pipeline(spark: SparkSession, cfg: PipelineConfig, fn: MessageFunction | None = None):
@@ -164,9 +180,47 @@ def run_pipeline_batch(
     fn: MessageFunction | None = None,
     enabled: bool = True,
 ) -> DataFrame:
-    """The same dataflow on a bounded frame (finite replay) — used by the
-    parity tests and by any backfill over landed data."""
-    return encode_stage(transform_messages(decode_stage(frames), fn, enabled=enabled))
+    """decode -> ``fn`` -> encode in ONE mapInPandas over ``value``: the
+    spine's stage for a streaming frame (``build_pipeline``) and for a
+    bounded one (finite replay, backfill over landed data).
+
+    The ``decoded`` tap is attached to the source frames, which are then
+    projected to ``value`` so envelope columns (Kafka topic, partition,
+    offset, timestamp) never enter the Python worker. ``fn`` keeps the
+    ``MessageFunction`` contract: a pandas batch with ``headers`` and
+    ``payload`` in, the same columns out. The headers it receives are
+    shared by frames of the same shape and read-only (``SharedHeaders``);
+    a function builds new headers instead of editing them in place.
+    ``enabled=False`` (or no ``fn``) is the R9 identity bypass. Output
+    is byte-identical to composing ``decode_stage``,
+    ``transform_messages`` and ``encode_stage`` (test_pipeline.py).
+
+    The decode and encode prefix caches live for the whole task, so a
+    header shape is parsed and framed once per task, not once per Arrow
+    batch; both are bounded.
+    """
+    import numpy as np
+    import pandas as pd
+
+    run_fn = enabled and fn is not None
+
+    def fused(batches):
+        decode_cache: dict[bytes, dict] = {}
+        encode_cache: dict[tuple, bytes] = {}
+        for pdf in batches:
+            decoded = [decode_with_prefix_cache(bytes(v), decode_cache) for v in pdf["value"]]
+            headers = np.fromiter((h for h, _ in decoded), object, len(decoded))
+            payloads = [p for _, p in decoded]
+            if run_fn:
+                batch = fn(pd.DataFrame({"headers": headers, "payload": payloads}))
+                headers, payloads = batch["headers"], batch["payload"]
+            values = [
+                encode_with_prefix_cache(h, p, encode_cache) for h, p in zip(headers, payloads)
+            ]
+            # null key mirrors the reference's ProducerRecord(topic, null, value)
+            yield pd.DataFrame({"key": [None] * len(values), "value": values})
+
+    return _observe_decoded(frames).select("value").mapInPandas(fused, schema=WIRE_FRAME_DDL)
 
 
 def run_pipeline_with_dlq(
@@ -205,52 +259,3 @@ def run_pipeline_with_dlq(
     good = decoded.filter(F.col("msg.error").isNull()).select("msg.headers", "msg.payload")
     out = encode_stage(transform_messages(good, fn, enabled=enabled))
     return out, dead
-
-
-def run_pipeline_fused(
-    frames: DataFrame,
-    fn: MessageFunction | None = None,
-    enabled: bool = True,
-) -> DataFrame:
-    """decode -> transform -> encode FUSED into one Arrow stage.
-
-    The staged pipeline crosses the Python/Arrow boundary three times
-    (decode pandas_udf, transform mapInPandas, encode pandas_udf), and
-    each crossing serializes the ``map<string,array<string>>`` headers
-    column — the most expensive Arrow conversion in the schema. Fusing
-    runs the same three steps inside ONE mapInPandas: binary in, binary
-    out, headers never leave the Python worker. Same ``MessageFunction``
-    contract (the fn still sees a pandas batch with headers/payload), and
-    output is parity-tested byte-for-byte against the staged path.
-
-    This is standard operator fusion, not a semantic change — the
-    reference itself runs decode->fn->encode pipelined per record
-    (StreamsApplication.java:146-163). Use the staged form when the
-    intermediate Message frame is needed (observability taps, joins
-    against decoded columns); use the fused form for pure
-    source->transform->sink replication, where it is ~2x faster.
-    """
-    import pandas as pd
-
-    from .codec import decode_with_prefix_cache, encode_with_prefix_cache
-
-    def fused(batches):
-        prefix_cache: dict[tuple, bytes] = {}
-        decode_cache: dict[bytes, dict] = {}
-        for pdf in batches:
-            headers, payloads = [], []
-            for data in pdf["value"]:
-                h, p = decode_with_prefix_cache(bytes(data), decode_cache)
-                headers.append(h)
-                payloads.append(p)
-            batch = pd.DataFrame({"headers": headers, "payload": payloads})
-            if enabled and fn is not None:
-                batch = fn(batch)
-            values = [
-                encode_with_prefix_cache(h, p, prefix_cache)
-                for h, p in zip(batch["headers"], batch["payload"])
-            ]
-            # null key mirrors the reference's ProducerRecord(topic, null, value)
-            yield pd.DataFrame({"key": [None] * len(values), "value": values})
-
-    return frames.mapInPandas(fused, schema=WIRE_FRAME_DDL)

@@ -227,3 +227,74 @@ class TestDecodePrefixCache:
         for i in range(1100):
             decode_with_prefix_cache(encode_py({"k": [str(i)]}, b"x"), cache)
         assert len(cache) <= 1024
+
+    def test_parity_over_hits_misses_and_a_full_cache(self):
+        """Once full, the cache keeps serving its shapes while new shapes
+        parse; malformed frames raise exactly as decode_py does."""
+        import random
+
+        from kafka_stream_service_spark.codec import (
+            PREFIX_CACHE_MAX,
+            decode_py,
+            decode_with_prefix_cache,
+            encode_py,
+        )
+
+        rng = random.Random(11)
+        repeated = [{"type": ["click"]}, {"type": ["view"], "v": ["1", "2"]}, {}]
+        frames = []
+        for i in range(3 * PREFIX_CACHE_MAX + 300):
+            h = rng.choice(repeated) if i % 3 else {"correlationId": [str(i)], "t": ["x"]}
+            frames.append(encode_py(h, rng.randbytes(rng.randrange(0, 30))))
+        cache: dict = {}
+        for f in frames:
+            assert decode_with_prefix_cache(f, cache) == decode_py(f)
+        assert len(cache) == PREFIX_CACHE_MAX
+        for f in frames[:50] + frames[-50:]:  # hits and post-fill misses
+            assert decode_with_prefix_cache(f, cache) == decode_py(f)
+        good = encode_py({"type": ["click"]}, b"xyz")
+        for bad in (b"", b"\xff", b"\x00" + good[1:], good[:4], good[:9], b"\xff\x05trunc"):
+            with pytest.raises(Exception) as want:
+                decode_py(bad)
+            with pytest.raises(want.type):
+                decode_with_prefix_cache(bad, cache)
+
+    def test_shared_headers_are_read_only_and_copy_plain(self):
+        import copy
+        import pickle
+
+        from kafka_stream_service_spark.codec import decode_with_prefix_cache, encode_py
+
+        h, _ = decode_with_prefix_cache(encode_py({"t": ["a"]}, b"p"), {})
+        edits = (
+            lambda: h.__setitem__("u", ["b"]),
+            lambda: h.update(u=["b"]),
+            lambda: h.pop("t"),
+            lambda: h["t"].append("b"),
+            lambda: h["t"].__setitem__(0, "b"),
+        )
+        for edit in edits:
+            with pytest.raises(TypeError, match="shared by every frame"):
+                edit()
+        assert h == {"t": ["a"]}
+        for plain in (copy.deepcopy(h), pickle.loads(pickle.dumps(h))):
+            assert type(plain) is dict and type(plain["t"]) is list and plain == h
+            plain["t"].append("b")
+        assert h == {"t": ["a"]}
+
+
+class TestEncodePrefixCache:
+    def test_cache_bounded_and_output_identical(self):
+        from kafka_stream_service_spark.codec import (
+            PREFIX_CACHE_MAX,
+            encode_py,
+            encode_with_prefix_cache,
+        )
+
+        cache: dict = {}
+        for i in range(2 * PREFIX_CACHE_MAX + 300):
+            h = {"correlationId": [str(i)]} if i % 2 else {"type": ["click"]}
+            payload = f"m{i}".encode()
+            assert encode_with_prefix_cache(h, payload, cache) == encode_py(h, payload)
+            assert len(cache) <= PREFIX_CACHE_MAX
+        assert len(cache) == PREFIX_CACHE_MAX

@@ -15,6 +15,8 @@ from kafka_stream_service_spark.codec import decode_py, encode_py
 from kafka_stream_service_spark.eos import ForeachBatchIdempotentWriter
 from kafka_stream_service_spark.pipeline import (
     PipelineConfig,
+    decode_stage,
+    encode_stage,
     run_pipeline_batch,
     start_pipeline,
 )
@@ -22,6 +24,7 @@ from kafka_stream_service_spark.transform import (
     FunctionConfig,
     RemoteFunction,
     identity_function,
+    transform_messages,
     uppercase_function,
 )
 
@@ -78,19 +81,116 @@ def test_dlq_pipeline_splits_poison_messages(spark):
     assert all(r.error for r in dead_rows)
 
 
-def test_fused_pipeline_byte_parity_with_staged(spark):
-    """The one-Arrow-pass fused pipeline (run_pipeline_fused) must be
-    byte-identical to the staged decode->transform->encode composition,
-    for both the uppercase transform and the identity bypass — it is an
-    operator-fusion optimization, not a semantic variant."""
-    from kafka_stream_service_spark.pipeline import run_pipeline_fused
+def _staged(frames, fn, enabled=True):
+    """The three-crossing composition of the public building blocks: the
+    reference the fused spine stage must match byte for byte."""
+    return encode_stage(transform_messages(decode_stage(frames), fn, enabled=enabled))
 
-    frames = wire_frames_df(spark)
-    for fn, enabled in ((uppercase_function, True), (identity_function, True), (None, False)):
-        staged = sorted(bytes(r.value) for r in run_pipeline_batch(frames, fn, enabled=enabled).collect())
-        fused = sorted(bytes(r.value) for r in run_pipeline_fused(frames, fn, enabled=enabled).collect())
-        assert fused == staged
-    assert all(r.key is None for r in run_pipeline_fused(frames, uppercase_function).collect())
+
+def _upper_seen_handler(request_iterator):
+    from kafka_stream_service_spark.grpc_function import pb_decode_message, pb_encode_message
+
+    for raw in request_iterator:
+        headers, payload = pb_decode_message(raw)
+        yield pb_encode_message({**headers, "seen": ["1"]}, payload.upper())
+
+
+def test_fused_pipeline_byte_parity_with_staged(spark):
+    """The spine's one-Arrow-pass stage (run_pipeline_batch) must be
+    byte-identical to the staged decode->transform->encode composition,
+    for the uppercase transform, the identity bypass and a RemoteFunction
+    over the stdlib gRPC transport to a live in-process server — it is an
+    operator fusion, not a semantic variant. The frames include a header
+    blob with non-compact JSON, which both forms re-encode compactly."""
+    from kafka_stream_service_spark.h2grpc import H2GrpcServer
+
+    loose = b"\xff\x01\x01t" + len(b'["a", "b"]').to_bytes(4, "big") + b'["a", "b"]' + b"loose"
+    rows = [(None, bytearray(encode_py(h, p))) for h, p in MESSAGES * 3] + [(None, bytearray(loose))]
+    frames = spark.createDataFrame(rows, "key binary, value binary")
+    srv = H2GrpcServer(_upper_seen_handler)
+    try:
+        remote = RemoteFunction(FunctionConfig(host="127.0.0.1", port=srv.port, transport="h2-stdlib"))
+        cases = ((uppercase_function, True), (identity_function, True), (None, False), (remote, True))
+        for fn, enabled in cases:
+            staged = sorted(bytes(r.value) for r in _staged(frames, fn, enabled).collect())
+            fused = run_pipeline_batch(frames, fn, enabled=enabled).collect()
+            assert sorted(bytes(r.value) for r in fused) == staged
+            assert all(r.key is None for r in fused)
+    finally:
+        srv.close()
+    assert all(decode_py(v)[0]["seen"] == ["1"] for v in staged)  # the remote case ran last
+
+
+def _plan_nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_spine_plan_has_one_python_node_over_value(spark, tmp_path):
+    """The streaming spine's executed plan runs exactly one Python
+    evaluation node, the fused MapInPandas, and feeds it only the
+    ``value`` column: no pandas-UDF codec node and no envelope column
+    enters the Python worker."""
+    src = tmp_path / "in"
+    wire_frames_df(spark).write.parquet(str(src))
+    cfg = PipelineConfig(
+        source="files",
+        sink="memory",
+        source_path=str(src),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        query_name="pipe_plan_test",
+    )
+    q = start_pipeline(spark, cfg, uppercase_function)
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+    finally:
+        q.stop()
+    python_nodes = [
+        n for n in _plan_nodes(plan) if any(w in n.nodeName() for w in ("Python", "Pandas", "Arrow"))
+    ]
+    assert [n.nodeName() for n in python_nodes] == ["MapInPandas"], plan.toString()
+    assert "ArrowEvalPython" not in plan.toString()
+    inputs = python_nodes[0].child().output()
+    assert [inputs.apply(i).name() for i in range(inputs.size())] == ["value"]
+
+
+def test_in_place_header_edit_fails_loudly(spark):
+    """Decoded headers are shared by every frame of the same shape (and,
+    through the task-long prefix cache, by later batches). A function
+    that edits them in place would rewrite other frames' output, so the
+    edit raises; a function that builds new headers changes only its own
+    frame."""
+
+    shared = [({"Accept": ["*/*"]}, f"p{i}".encode()) for i in range(6)]
+    frames = wire_frames_df(spark, shared)
+
+    def add_in_place(batch):
+        batch["headers"].iloc[0]["added"] = ["x"]
+        return batch
+
+    def append_in_place(batch):
+        batch["headers"].iloc[0]["Accept"].append("x")
+        return batch
+
+    for fn in (add_in_place, append_in_place):
+        with pytest.raises(Exception, match="shared by every frame"):
+            run_pipeline_batch(frames, fn).collect()
+
+    def add_to_p0(batch):
+        out = batch.copy()
+        out["headers"] = [
+            {**h, "added": ["x"]} if p == b"p0" else h
+            for h, p in zip(batch["headers"], batch["payload"])
+        ]
+        return out
+
+    out = decode_outputs(run_pipeline_batch(frames, add_to_p0).collect())
+    assert sorted(out, key=lambda m: m[1]) == [
+        ({"Accept": ["*/*"], "added": ["x"]} if p == b"p0" else h, p) for h, p in shared
+    ]
 
 
 def test_identity_bypass(spark):
